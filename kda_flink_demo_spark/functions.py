@@ -24,6 +24,13 @@ def det_round_sql(expr: str, digits: int) -> str:
     return f"floor(({expr}) * {scale} + 0.5) / {scale}"
 
 
+def sql_ident(name: str) -> str:
+    """Backtick-quote a column name for interpolation into a SQL expression
+    string, doubling embedded backticks — so ``"doc id"`` or ``"a`b"`` resolve
+    to the column of that name instead of failing to parse."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def det_round_np(arr, digits: int):
     import numpy as np
 

@@ -124,87 +124,3 @@ def count_windows_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def count_windows_tws(
-    events: DataFrame,
-    key: str = "railway_class",
-    ts: str = "rowtime",
-    value_col: str = "value",
-    size: int = 100,
-    watermark_delay: str = "0 seconds",
-) -> DataFrame:
-    """The same count-window operator on Spark 4's
-    ``transformWithStateInPandas`` — the second operator on the successor
-    stateful API (the sliding range count covers ListState; this one covers
-    typed ValueState: the whole per-key state is the same three scalars,
-    fetched and replaced wholesale each batch). Results are asserted
-    identical to the applyInPandasWithState path and to the batch oracle in
-    tests. REQUIRES RocksDB state store + a google.protobuf runtime — in this
-    container supplied by ``protobuf_compat``/``pb_shim`` (see
-    ``sliding_state.sliding_range_count_tws``, the first TWS twin)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class CountWindowProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._acc = handle.getValueState(
-                "acc", "next_window_id BIGINT, leftover_count BIGINT, leftover_sum DOUBLE"
-            )
-
-        def handleInputRows(self, key_tuple, rows, timer_values):
-            import numpy as np
-
-            wid, cnt, acc = self._acc.get() if self._acc.exists() else (0, 0, 0.0)
-            parts = [p for p in rows if len(p)]
-            if not parts:
-                return iter([])
-            pdf = pd.concat(parts) if len(parts) > 1 else parts[0]
-            # deterministic in-window order: the batch row_number's sort key
-            pdf = pdf.sort_values(["rowtime", "event_id"], kind="mergesort")
-            vals = pdf[value_col].to_numpy(dtype="float64")
-            total = cnt + len(vals)
-            n_closed = total // size
-            if n_closed == 0:
-                self._acc.update((int(wid), int(total), float(acc + vals.sum())))
-                return iter([])
-            csum = np.concatenate(([0.0], np.cumsum(vals)))
-            ends = np.arange(1, n_closed + 1) * size - cnt
-            starts = np.maximum(ends - size, 0)
-            sums = csum[ends] - csum[starts]
-            if cnt > 0:
-                sums[0] += acc
-            leftover_cnt = total - n_closed * size
-            leftover_sum = float(csum[-1] - csum[ends[-1]])
-            self._acc.update((int(wid + n_closed), int(leftover_cnt), leftover_sum))
-            rounded = [math.floor(s * 10000.0 + 0.5) / 10000.0 for s in sums]
-            return iter(
-                [
-                    pd.DataFrame(
-                        {
-                            key: key_tuple[0],
-                            "window_id": np.arange(wid, wid + n_closed, dtype="int64"),
-                            "railway_class_count": np.full(n_closed, size, dtype="int64"),
-                            "sum_value": rounded,
-                        }
-                    )
-                ]
-            )
-
-        def close(self) -> None:
-            pass
-
-    renamed = events.select(
-        F.col("event_id"),
-        F.col(key).cast("string").alias(key),
-        F.col(ts).alias("rowtime"),
-        F.col(value_col).alias(value_col),
-    ).withWatermark("rowtime", watermark_delay)
-    return renamed.groupBy(key).transformWithStateInPandas(
-        statefulProcessor=CountWindowProcessor(),
-        outputStructType=_output_schema(key),
-        outputMode="Append",
-        timeMode="EventTime",
-    )

@@ -131,77 +131,3 @@ def sliding_range_count_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def sliding_range_count_tws(
-    events: DataFrame,
-    key: str = "railway_class",
-    ts: str = "rowtime",
-    preceding_seconds: int = 30 * 60,
-    watermark_delay: str = "0 seconds",
-) -> DataFrame:
-    """Same operator on Spark 4's transformWithStateInPandas — the successor
-    stateful API (typed ListState, timers, TTL). Kept alongside the
-    applyInPandasWithState version to cover both API generations; results are
-    asserted identical in tests. REQUIRES the RocksDB state-store provider
-    (jobs.use_rocksdb_state) and a ``google.protobuf`` runtime (the TWS
-    state-server protocol) — this container has none installed, but
-    ``protobuf_compat`` shims one from the google-cloud-sdk's bundled
-    pure-python copy (see ``pb_shim/sitecustomize.py``), so the parity test
-    RUNS here; on hosts with no shimmable protobuf it env-gates to a skip.
-
-    State design: one ListState of int64 micros per key, replaced wholesale each
-    batch after watermark pruning (the list is bounded by rate × interval)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    interval_us = preceding_seconds * 1_000_000
-
-    class SlidingCountProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._times = handle.getListState("times", "t BIGINT")
-
-        def handleInputRows(self, key_tuple, rows, timer_values):
-            import numpy as np
-
-            state_times = np.array([r[0] for r in self._times.get()], dtype=np.int64)
-            parts = [p for p in rows if len(p)]
-            if not parts:
-                return iter([])
-            pdf = pd.concat(parts) if len(parts) > 1 else parts[0]
-            t_us = (pdf["rowtime"].astype("int64").to_numpy() // 1000).astype(np.int64)
-            merged = np.sort(np.concatenate([state_times, t_us]))
-            hi = np.searchsorted(merged, t_us, side="right")
-            lo = np.searchsorted(merged, t_us - interval_us, side="left")
-            counts = (hi - lo).astype(np.int64)
-            wm_ms = timer_values.getCurrentWatermarkInMs()
-            if wm_ms > 0:
-                cutoff = wm_ms * 1000 - interval_us
-                merged = merged[np.searchsorted(merged, cutoff, side="left"):]
-            self._times.clear()
-            if len(merged):
-                self._times.appendList([(int(t),) for t in merged.tolist()])
-            out = pd.DataFrame(
-                {
-                    "event_id": pdf["event_id"].to_numpy(),
-                    key: key_tuple[0],
-                    "rowtime": pdf["rowtime"],
-                    "railway_class_count": counts,
-                }
-            )
-            return iter([out])
-
-        def close(self) -> None:
-            pass
-
-    renamed = events.select(
-        F.col("event_id"), F.col(key).cast("string").alias(key), F.col(ts).alias("rowtime")
-    ).withWatermark("rowtime", watermark_delay)
-    return renamed.groupBy(key).transformWithStateInPandas(
-        statefulProcessor=SlidingCountProcessor(),
-        outputStructType=_output_schema(key),
-        outputMode="Append",
-        timeMode="EventTime",
-    )

@@ -3,14 +3,6 @@ from __future__ import annotations
 import pytest
 
 from kda_flink_demo_spark.session import get_spark
-from kda_flink_demo_spark.streaming import protobuf_compat
-
-# Must happen at import time, BEFORE any SparkSession (and its JVM) exists:
-# workers/streaming runners inherit PYTHONPATH from the JVM's launch env, and
-# the transformWithStateInPandas tests need the protobuf shim in every python
-# process (no-op on hosts with a real protobuf install).
-protobuf_compat.export_worker_pythonpath()
-protobuf_compat.install_in_process()
 
 SF_DIR = "/root/testdata/sf0.001"
 SF_DIR_MED = "/root/testdata/sf0.01"

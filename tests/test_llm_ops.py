@@ -573,6 +573,27 @@ def test_semantic_dedup_pairs_within_clusters_only(embeddings):
         assert r.vec_a < r.vec_b
 
 
+def test_kmeans_and_pq_encode_accept_odd_column_names(embeddings):
+    """Column names are backtick-quoted inside the SQL expression strings: an
+    id column with a space and a vector column with an embedded backtick give
+    the same rows as plain names."""
+    from kda_flink_demo_spark.operators.llm import kmeans
+    from kda_flink_demo_spark.operators.llm.embeddings import pq_encode
+
+    def run(id_col, vec_col):
+        df = embeddings.withColumnRenamed("vec_id", id_col).withColumnRenamed(
+            "embedding", vec_col
+        )
+        asg = kmeans.kmeans_assign(df, k=4, iters=2, id_col=id_col, vec_col=vec_col)
+        codes = pq_encode(df, k=4, iters=1, id_col=id_col, vec_col=vec_col)
+        assert asg.columns[0] == id_col and codes.columns[0] == id_col
+        return sorted(map(tuple, asg.collect())), sorted(map(tuple, codes.collect()))
+
+    plain = run("doc_id", "emb")
+    assert plain[0] and plain[1]
+    assert run("doc id", "emb`v") == plain
+
+
 def test_dataset_split_deterministic_proportioned_partition_invariant(documents):
     """The split must be a total assignment, roughly proportioned to the
     weights, identical across partitioning, and stable doc-by-doc (train/val/

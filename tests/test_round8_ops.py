@@ -516,25 +516,6 @@ def test_image_dedup_probe_and_standing_index(spark, tmp_path):
     assert spark.read.parquet(f"{sink}/batch=2").count() == 0
 
 
-def test_protobuf_compat_shims_tws_protocol():
-    """The shim makes the transformWithStateInPandas protocol importable in
-    this interpreter (idempotently); where it reports available, pyspark's
-    protobuf-6 gencode must actually build messages on the shimmed runtime.
-    The end-to-end streaming parity lives in
-    tests/test_streaming.py::test_transform_with_state_matches_batch."""
-    from kda_flink_demo_spark.streaming import protobuf_compat
-
-    assert os.path.isdir(protobuf_compat.shim_dir())
-    ok1 = protobuf_compat.install_in_process()
-    ok2 = protobuf_compat.install_in_process()
-    assert ok1 == ok2  # idempotent
-    if ok1:
-        import pyspark.sql.streaming.proto.StateMessage_pb2 as sm
-
-        req = sm.StateRequest(version=3)
-        assert sm.StateRequest.FromString(req.SerializeToString()).version == 3
-
-
 def test_registry_has_no_oracle_less_queries():
     """Every driver queries() row must carry an oracle — the oracle-less
     library entries (embedding_pca, dedup_simhash) are helpers now, so the
